@@ -76,38 +76,9 @@ object Bench {
     }
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .withExtensions(new GraftExtensions)
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      // UTC like Verify: the events NTZ->timestamp normalization in
-      // Tables is zone-relabeling only under UTC, and benchmarked row
-      // sets must match the rows the correctness gate verified on any
-      // host timezone (build.sbt sets the -D for sbt runs; this keeps
-      // direct spark-submit launches identical)
-      .config("spark.sql.session.timeZone", "UTC")
-      // see Verify: events' TIMESTAMP(NANOS) mapping, set at bootstrap
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      // AQE coalescing floor: set PER QUERY by SparkEntry's
-      // withCoalesceFloor wrapper since r18 (the r17 session-wide 64k
-      // floor was a wash at verified 32-way parallelism — see
-      // SparkEntry.denseCoalesce for the rationale and the A/B gate)
-      //
-      // Local FS without CRC sidecars (r18, guide §6/§1.2): Hadoop's
-      // default local FS is ChecksumFileSystem — every file write
-      // also writes a .crc sidecar and every read re-verifies it,
-      // doubling the per-file I/O of the store lifecycles' many tiny
-      // parquet commits (isolated A/B: q128 2.73→1.88s, q116
-      // 3.06→2.65s). Production file systems (HDFS/S3) carry their
-      // own integrity checks, so the client-side CRC emulation is a
-      // local-mode artifact — the lease/manifest code already
-      // bypasses it for its own I/O (JsonLease.rawFs). Deployment
-      // config, not engine semantics: set here and in Verify alike.
-      .config("spark.hadoop.fs.file.impl", sys.env.getOrElse(
-        "SPARK_GRAFT_FS_IMPL", "org.apache.hadoop.fs.RawLocalFileSystem"))
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    // AQE coalescing floor: set PER QUERY by SparkEntry's
+    // withCoalesceFloor wrapper (see SparkEntry.denseCoalesce)
+    val spark = GraftSession("graft-bench")
     // Host-load calibration: a fixed arithmetic loop on 8 PARALLEL
     // threads (deterministic work, no allocation), timed before and
     // after the suite. Three rounds of bench adjudication have hinged

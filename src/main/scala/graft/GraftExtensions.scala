@@ -7,13 +7,17 @@ import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo, Li
 import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.types.{ArrayType, DoubleType}
 
-/** Session extensions installing graft's native expressions
-  * (`SparkSession.builder().withExtensions(new GraftExtensions)` or
-  * `spark.sql.extensions=graft.GraftExtensions`).
+/** Session extensions installing graft's native expressions.
+  * [[GraftSession]] installs them on every graft session, and the
+  * operators call the `graft_*` functions unconditionally; an
+  * externally built session needs
+  * `spark.sql.extensions=graft.GraftExtensions`.
   *
   * Only expressions whose composed-function form measurably loses
   * codegen live here (SURVEY §4.2: custom code confined to the
-  * expression/aggregator layer), plus TWO analyzer rules —
+  * expression/aggregator layer); each is the fused form of that
+  * composed tree, which its spec keeps as the parity oracle. Plus TWO
+  * analyzer rules —
   * [[graft.sources.ResolveGraftSqlOnFile]], which gives the DSv2
   * source the `FROM graftjson.`/dir`` SQL-on-file surface Spark
   * reserves for V1 file formats, and

@@ -1,7 +1,6 @@
 package graft
 
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobEnd, SparkListenerJobStart, SparkListenerStageCompleted}
-import org.apache.spark.sql.SparkSession
 
 /** Optimization-round profiler: runs ONE declared query N times and
   * prints per-job and per-stage wall times from a SparkListener, so a
@@ -16,17 +15,8 @@ object JobProfile {
     require(args.nonEmpty, "usage: JobProfile <qNN> [passes]")
     val passes = if (args.length > 1) args(1).toInt else 3
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .withExtensions(new GraftExtensions)
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      // coalescing floor: per query via SparkEntry.withCoalesceFloor
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    // coalescing floor: per query via SparkEntry.withCoalesceFloor
+    val spark = GraftSession("graft-job-profile")
     val hits = SparkEntry.queries.keys
       .filter(k => k == args(0) || k.takeWhile(_ != '_') == args(0)).toSeq
     require(hits.size == 1, s"matches: ${hits.sorted.mkString(",")}")
@@ -72,20 +62,8 @@ object JobProfile {
       val total = (System.nanoTime() - t0) / 1e9
       // drain the listener bus BEFORE reading the J vars (ADVICE r17:
       // the listener mutates them on the bus thread; waitUntilEmpty is
-      // the happens-before edge a capture-flag flip + sleep lacked).
-      // Reflection because listenerBus is private[spark] at the source
-      // level only — dev tool, never on the bench/verify path.
-      locally {
-        val sc = spark.sparkContext
-        val bus = sc.getClass.getMethods.find(_.getName == "listenerBus")
-          .map(_.invoke(sc))
-        bus.foreach { b =>
-          b.getClass.getMethods
-            .find(m => m.getName == "waitUntilEmpty" &&
-              m.getParameterCount == 1)
-            .foreach(_.invoke(b, java.lang.Long.valueOf(10000L)))
-        }
-      }
+      // the happens-before edge a capture-flag flip + sleep lacked)
+      org.apache.spark.GraftListenerBus.drain(spark.sparkContext)
       capture = false
       spark.catalog.clearCache()
       spark.sparkContext.getPersistentRDDs.values

@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.execution.ExplainMode
 
 /** Plan-capture helper for the optimization rounds: writes
@@ -19,17 +18,8 @@ object PlanDump {
     val outDir = java.nio.file.Paths.get(args(0))
     java.nio.file.Files.createDirectories(outDir)
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .withExtensions(new GraftExtensions)
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      // coalescing floor: per query via SparkEntry.withCoalesceFloor
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    // coalescing floor: per query via SparkEntry.withCoalesceFloor
+    val spark = GraftSession("graft-plan-dump")
     val wanted = args.drop(1).toSet
     val qs = SparkEntry.queries.toSeq.sortBy(_._1).filter { case (k, _) =>
       wanted.isEmpty || wanted.contains(k) ||

@@ -2,6 +2,7 @@ package graft
 
 import graft.queries.{Analytic, Curation, JsonQueries, LlmQueries, Pipeline, Relational}
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.internal.SQLConf
 
 /** Driver contract — see /root/repo/SURVEY.md §7 + the builder prompt.
   *
@@ -62,7 +63,8 @@ object SparkEntry {
     "q251_sql_merge_cdc")
 
   /** Every query entry pins its own coalescing floor at build time —
-    * dense queries the 64k rescue, everything else the Spark default —
+    * dense queries the 64k rescue, everything else the deployment's
+    * value (the launch conf, else the Spark default) —
     * so the choice travels with the queries map into Bench, Verify,
     * the driver, and the test sessions alike (ADVICE r17: the specs
     * used to validate plans under a different floor than the bench
@@ -81,10 +83,13 @@ object SparkEntry {
   private def withCoalesceFloor(
       name: String, fn: (SparkSession, String) => DataFrame)
       : (SparkSession, String) => DataFrame = { (s, d) =>
+    // non-dense entries restore the deployment's floor: the session's
+    // own launch conf if it set one, else Spark's default
     s.conf.set(coalesceFloorKey,
       if (denseCoalesce(name))
         sys.env.getOrElse("SPARK_GRAFT_MIN_COALESCE", "64k")
-      else "1m")
+      else s.sparkContext.getConf.getOption(coalesceFloorKey).getOrElse(
+        SQLConf.COALESCE_PARTITIONS_MIN_PARTITION_SIZE.defaultValueString))
     fn(s, d)
   }
 

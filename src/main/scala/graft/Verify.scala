@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
@@ -10,28 +9,9 @@ object Verify {
     val (sfDir, outDir) = (args(0), args(1))
     val only: Option[Set[String]] =
       if (args.length > 2) Some(args(2).split(",").toSet) else None
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .withExtensions(new GraftExtensions)
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      // session bootstrap, not read-time side effect (ADVICE r2): the
-      // events table carries TIMESTAMP(NANOS); TablesSpec guards that
-      // no OTHER table silently reads nanos as bigint under this flag
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      // AQE coalescing floor — set per query by SparkEntry's
-      // withCoalesceFloor wrapper (see SparkEntry.denseCoalesce)
-      //
-      // raw local FS (no CRC sidecars) — same rationale as Bench:
-      // ChecksumFileSystem's client-side CRC emulation is a local-mode
-      // artifact production file systems don't have; kept identical
-      // here so the correctness gate runs the exact bench I/O stack
-      .config("spark.hadoop.fs.file.impl", sys.env.getOrElse(
-        "SPARK_GRAFT_FS_IMPL", "org.apache.hadoop.fs.RawLocalFileSystem"))
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    // AQE coalescing floor — set per query by SparkEntry's
+    // withCoalesceFloor wrapper (see SparkEntry.denseCoalesce)
+    val spark = GraftSession("graft-verify")
     // java.io.File by contract: outDir is the driver's LOCAL dump
     // directory (the correctness gate reads it with DuckDB on this
     // host) — the Fs invariant covers STORE paths, not this artifact

@@ -1,28 +1,15 @@
 package graft.cli
 
-import graft.GraftExtensions
 import org.apache.spark.sql.{Dataset, SparkSession}
 import org.apache.spark.sql.functions.col
 
-/** Shared CLI plumbing: session construction and document reading
-  * (both CLIs mirror the reference launchers' file handling —
-  * JsonSchemaFinder.java:233-238 / JsonShredder.java:95-100).
+/** Shared CLI plumbing: document reading (both CLIs mirror the
+  * reference launchers' file handling — JsonSchemaFinder.java:233-238
+  * / JsonShredder.java:95-100). Sessions come from
+  * [[graft.GraftSession]].
   * `private[graft]`: the graftjson DSv2 source reuses [[readDocs]]
   * for its planning-time inference pass. */
 private[graft] object CliSession {
-
-  def build(appName: String): SparkSession = {
-    val spark = SparkSession.builder()
-      .withExtensions(new GraftExtensions)
-      .appName(appName)
-      .master(sys.env.getOrElse("SPARK_MASTER", "local[*]"))
-      .config("spark.sql.shuffle.partitions",
-        sys.env.getOrElse("SPARK_GRAFT_CPUS", "32"))
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    spark
-  }
 
   /** Per-input "Reading <file>" progress lines, reference parity.
     * The two reference CLIs use DIFFERENT streams — the schema finder

@@ -1,7 +1,6 @@
 package graft.cli
 
-import graft.GraftExtensions
-import org.apache.spark.sql.SparkSession
+import graft.GraftSession
 
 /** Plan-inspection CLI: prints the formatted physical plan (and
   * optionally times an execution) for named [[graft.SparkEntry]]
@@ -17,14 +16,7 @@ object ExplainQuery {
     val dir = args(0)
     val names = args(1).split(",").toSeq
     val time = args.contains("--time")
-    val spark = SparkSession.builder()
-      .withExtensions(new GraftExtensions)
-      .master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = GraftSession("graft-explain-query")
     spark.sparkContext.setLogLevel("ERROR")
     for (n <- names) {
       val fn = graft.SparkEntry.queries(n)

@@ -30,7 +30,7 @@ object FindJsonSchema {
     val files = args.filterNot(a => a == "-f" || a == "--whole")
     require(files.nonEmpty, "usage: FindJsonSchema [-f] [--whole] <json file or glob>...")
 
-    val spark = CliSession.build("graft-find-json-schema")
+    val spark = graft.GraftSession("graft-find-json-schema")
     val docs = CliSession.readDocs(spark, files.toSeq, whole)
     // one pass: tiny per-partition partial schemas, one combine
     val (schema, count) = docs.select(new InferSchemaCountAgg().toColumn).head()

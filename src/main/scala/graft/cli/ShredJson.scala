@@ -25,7 +25,7 @@ object ShredJson {
     val outDir = rest.head
     val files = rest.tail
 
-    val spark = CliSession.build("graft-shred-json")
+    val spark = graft.GraftSession("graft-shred-json")
     // the shredder's "Reading" lines go to STDOUT in the reference
     // (JsonShredder.java:93-94), unlike the schema finder's stderr
     val docs = CliSession.readDocs(spark, files.toSeq, whole,

@@ -15,8 +15,8 @@ import org.apache.spark.sql.types.{ArrayType, DataType, LongType, StringType}
   * the projection out of whole-stage codegen; this expression reads
   * UTF8Strings straight off the array inside the generated loop. The
   * hash family (MurmurHash3 string hash, seeds 0xCAFEF00D/0x9747B28C)
-  * is IDENTICAL to the composed UDF — SimhashSignatureSpec pins
-  * bit-equality, and the q53 bucket keys depend on it.
+  * is IDENTICAL to the UDF oracle SimhashSignatureSpec keeps, which
+  * pins bit-equality; the q53 bucket keys depend on it.
   *
   * Re-expresses the candidate-bucketing role of the reference's
   * per-document type fingerprint (no direct reference twin — simhash

@@ -3,8 +3,8 @@ package graft.functions
 /** Single source of truth for the seeded universal-hash family
   * h_i(x) = (a_i·x + b_i) mod p over the Mersenne prime p = 2^31−1,
   * shared by the native `graft_minhash` expression and the composed
-  * fallback in `TextOps` — the two must stay bit-identical (the specs
-  * assert it), so the derivation lives in exactly one place.
+  * oracle in MinhashSignatureSpec — the two must stay bit-identical,
+  * so the derivation lives in exactly one place.
   */
 object UniversalHash {
   /** Mersenne prime 2^31 − 1: `a·h + b` stays below 2^62 for

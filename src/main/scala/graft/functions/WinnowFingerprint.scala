@@ -16,7 +16,8 @@ import org.apache.spark.unsafe.types.UTF8String
   * (O(n) amortized), and stays inside whole-stage codegen via a static
   * helper call.
   *
-  * Bit-parity contract with the composed form (spec-asserted):
+  * Bit-parity contract with the composed form (WinnowFingerprintSpec
+  * keeps it as the oracle):
   * k-grams are taken with the same character semantics as `substr`
   * (`UTF8String.substringSQL`), hashed to lowercase md5 hex, window
   * minima compared as strings (hex is ASCII, so UTF8String and

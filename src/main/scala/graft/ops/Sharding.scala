@@ -335,8 +335,7 @@ object Sharding {
     // partition with zero output rows — their dirs must be REMOVED,
     // and the marker carries the list so a crash cannot strand them
     // half-served (the deleteFromIvfIndex protocol)
-    val outBuckets = obs.get("buckets")
-      .asInstanceOf[scala.collection.Seq[Int]].toSet
+    val outBuckets = Observed.ints(obs.get("buckets"), "buckets").toSet
     val emptied = touched.filterNot(outBuckets.contains)
     // the -1 sentinel makes the marker ALWAYS non-empty: a fileless
     // husk (crash during this very write) then reads as zero rows and

@@ -8,10 +8,10 @@ import org.apache.spark.storage.StorageLevel
   * exact + near-duplicate detection, document fingerprinting, token
   * statistics, language ID, quality scoring. All hot paths are
   * Catalyst expressions (codegen'd, no Python, no driver loops); the
-  * only remaining UDFs are the Bloom-filter membership probe (no
-  * public expression covers it) and the simhash FALLBACK for sessions
-  * without [[graft.GraftExtensions]] (the native graft_simhash
-  * expression serves the hot path).
+  * fused ones (graft_isect, graft_minhash, graft_simhash,
+  * graft_winnow, graft_deflate_len, graft_bloom_contains) come from
+  * [[graft.GraftExtensions]], which every [[graft.GraftSession]]
+  * installs, so each operator has exactly one production path.
   *
   * Scale shape: every operator is a linear scan plus keyed shuffles,
   * so the plans hold at 100 TB: no cross join ever touches the full
@@ -19,18 +19,6 @@ import org.apache.spark.storage.StorageLevel
   * bucket-keyed, never all-pairs.
   */
 object TextOps {
-
-  /** Native-expression probe against the session the plan will RUN on
-    * — the DataFrame's own session when one is in hand, falling back
-    * to the active session only for Column-only entry points. In a
-    * multi-session setup the active session may have graft_* installed
-    * while the frame's own session does not (or vice versa); probing
-    * the wrong one makes `call_function` fail at analysis instead of
-    * falling back to the composed form (ADVICE r2). */
-  private def hasNative(s: Option[org.apache.spark.sql.SparkSession],
-                        name: String): Boolean =
-    s.orElse(org.apache.spark.sql.SparkSession.getActiveSession)
-      .exists(_.catalog.functionExists(name))
 
   /** Distinct word set of a text column (the unigram shingle set). */
   def wordSet(text: Column): Column = array_distinct(split(text, " "))
@@ -100,15 +88,12 @@ object TextOps {
 
   /** Jaccard from pre-computed set sizes: |∩| / (|A| + |B| − |∩|).
     * Identical value (the inputs are distinct sets) at half the array
-    * traffic — the hot-pair form. With [[graft.GraftExtensions]]
-    * installed the intersection is the native two-pointer merge over
-    * the pre-sorted sets ([[graft.functions.SortedIntersectSize]]);
-    * otherwise `array_intersect` (which hashes per pair). */
-  private def jaccardSized(a: Column, b: Column, sa: Column, sb: Column,
-                           nativeIsect: Boolean): Column = {
-    val inter =
-      if (nativeIsect) call_function("graft_isect", a, b).cast("double")
-      else size(array_intersect(a, b)).cast("double")
+    * traffic — the hot-pair form. The intersection is the native
+    * two-pointer merge over the pre-sorted sets
+    * ([[graft.functions.SortedIntersectSize]]), not `array_intersect`
+    * (which hashes per pair). */
+  private def jaccardSized(a: Column, b: Column, sa: Column, sb: Column): Column = {
+    val inter = call_function("graft_isect", a, b).cast("double")
     // two empty sets: J defined as 0 (empty docs must not near-dup-match
     // every other empty doc at scale), and the guard keeps ANSI mode
     // from throwing DIVIDE_BY_ZERO when Catalyst reorders this ahead of
@@ -143,16 +128,14 @@ object TextOps {
     * (distinct frames per side — ids may legitimately collide across
     * sides there). */
   private def verifyCandidates2(candidates: DataFrame,
-      setsA: DataFrame, setsB: DataFrame, threshold: Double,
-      session: Option[org.apache.spark.sql.SparkSession]): DataFrame = {
+      setsA: DataFrame, setsB: DataFrame, threshold: Double): DataFrame = {
     candidates
       .join(setsA.select(col("doc_id").as("doc_a"), col("w").as("wa"),
         col("sz").as("sa")), "doc_a")
       .join(setsB.select(col("doc_id").as("doc_b"), col("w").as("wb"),
         col("sz").as("sb")), "doc_b")
       .where(sizeCompatible(col("sa"), col("sb"), threshold))
-      .withColumn("jac", jaccardSized(col("wa"), col("wb"), col("sa"), col("sb"),
-        hasNative(session, "graft_isect")))
+      .withColumn("jac", jaccardSized(col("wa"), col("wb"), col("sa"), col("sb")))
       .where(col("jac") >= threshold)
       .select(col("doc_a"), col("doc_b"), round(col("jac"), 4).as("jac"))
   }
@@ -160,9 +143,8 @@ object TextOps {
   /** Single-table form: both pair sides resolve in the same shingle
     * table (doc ids unique within it). */
   private def verifyCandidates(candidates: DataFrame, sets: DataFrame,
-      threshold: Double,
-      session: Option[org.apache.spark.sql.SparkSession]): DataFrame =
-    verifyCandidates2(candidates, sets, sets, threshold, session)
+      threshold: Double): DataFrame =
+    verifyCandidates2(candidates, sets, sets, threshold)
 
   /** EXACT near-dup pairs, 100 TB-safe: prefix-filter candidate
     * generation (the AllPairs / PPJoin family — Bayardo et al.
@@ -235,52 +217,25 @@ object TextOps {
           sizeCompatible(col("x.sz"), col("y.sz"), threshold))
       .select(col("x.doc_id").as("doc_a"), col("y.doc_id").as("doc_b"))
       .distinct()
-    verifyCandidates(candidates, sets, threshold, Some(docs.sparkSession))
+    verifyCandidates(candidates, sets, threshold)
   }
 
   // ---- MinHash + LSH ------------------------------------------------------
 
-  // single source of truth shared with the native graft_minhash
-  // expression — see graft.functions.UniversalHash
-  private val MinhashPrime = graft.functions.UniversalHash.Prime
-
-  private def coefficients(n: Int): Seq[(Long, Long)] =
-    graft.functions.UniversalHash.coefficients(n).toSeq
-
   /** MinHash signature of a word-set column: for each of `n` universal
     * hashes h_i(x) = (a_i·x + b_i) mod p, the min over the set's
-    * base hashes. Pure expressions (xxhash64 + transform/array_min),
-    * codegen'd, embarrassingly parallel. Operands stay < 2^62 so ANSI
-    * overflow checking never trips. */
+    * base hashes (xxhash64 per word, then the native fold; the
+    * coefficients come from [[graft.functions.UniversalHash]]).
+    * Codegen'd, embarrassingly parallel. */
   def minhashSignature(words: Column, n: Int): Column =
     minhashSignatureFromHashes(transform(words, w => xxhash64(w)), n)
 
   /** Signature from pre-hashed shingles (shares the base hash pass
-    * with the verification stage). Uses the native one-pass
-    * [[graft.functions.MinhashSignature]] when [[graft.GraftExtensions]]
-    * is installed (the composed form below traverses the array once
-    * per lane through interpreted lambdas); values are identical.
-    * `session`: pass the frame's own session when known (DataFrame
-    * entry points do); the Column-only form probes the active one. */
-  def minhashSignatureFromHashes(
-      hashes: Column, n: Int,
-      session: Option[org.apache.spark.sql.SparkSession] = None): Column =
-    if (hasNative(session, "graft_minhash"))
-      call_function("graft_minhash", hashes, lit(n))
-    else {
-      val base = transform(hashes, h => pmod(h, lit(MinhashPrime)))
-      val sig = array(coefficients(n).map { case (a, b) =>
-        // coalesce: min over an empty set is the hash-domain max (the
-        // native expression's convention), not null
-        coalesce(
-          array_min(transform(base, h => pmod(h * lit(a) + lit(b), lit(MinhashPrime)))),
-          lit(MinhashPrime))
-      }: _*)
-      // null input array → null signature (the native expression's
-      // unary null contract; coalesce alone would turn it into the
-      // sentinel signature and bucket null docs together)
-      when(hashes.isNotNull, sig)
-    }
+    * with the verification stage): the native one-pass
+    * [[graft.functions.MinhashSignature]], which folds every lane in
+    * one traversal of the array. */
+  def minhashSignatureFromHashes(hashes: Column, n: Int): Column =
+    call_function("graft_minhash", hashes, lit(n))
 
   /** Band structs `(band, band_key)` for a signature column — the ONE
     * copy of the band-key formula (every banded entry point, batch and
@@ -305,8 +260,7 @@ object TextOps {
   def minhashBands(docs: DataFrame, nSig: Int, bands: Int,
                    ngram: Int = 1): DataFrame =
     bandRows(docs.withColumn("sig",
-      minhashSignatureFromHashes(ngramHashSet(col("text"), ngram), nSig,
-        Some(docs.sparkSession))),
+      minhashSignatureFromHashes(ngramHashSet(col("text"), ngram), nSig)),
       nSig, bands)
 
   /** Deterministic train/val/test split: each doc's split derives
@@ -439,10 +393,8 @@ object TextOps {
   def nearDupSuppress(docs: DataFrame, nSig: Int = 12, bands: Int = 3,
                       ngram: Int = 1): DataFrame = {
     import org.apache.spark.sql.expressions.Window
-    val session = Some(docs.sparkSession)
     val withSig = docs.select(col("doc_id"),
-      minhashSignatureFromHashes(ngramHashSet(col("text"), ngram), nSig,
-        session).as("sig"))
+      minhashSignatureFromHashes(ngramHashSet(col("text"), ngram), nSig).as("sig"))
     val rows = withSig.select(col("doc_id"),
       explode(bandStructs(col("sig"), nSig, bands)).as("b"))
     val w = Window.partitionBy(col("b.band"), col("b.band_key"))
@@ -487,8 +439,7 @@ object TextOps {
     // the signature's per-lane minima are order-free, so the SORTED
     // set yields the identical signature the raw shingle stream would
     val banded = bandRows(
-      sets.withColumn("sig", minhashSignatureFromHashes(col("w"), nSig,
-        Some(docs.sparkSession))),
+      sets.withColumn("sig", minhashSignatureFromHashes(col("w"), nSig)),
       nSig, bands)
     val candidates = banded.as("x")
       .join(banded.as("y"),
@@ -497,7 +448,7 @@ object TextOps {
           col("x.doc_id") < col("y.doc_id"))
       .select(col("x.doc_id").as("doc_a"), col("y.doc_id").as("doc_b"))
       .distinct()
-    verifyCandidates(candidates, sets, threshold, Some(docs.sparkSession))
+    verifyCandidates(candidates, sets, threshold)
   }
 
   /** Incremental dedup: flag each document of a NEW batch against an
@@ -532,7 +483,6 @@ object TextOps {
   def incrementalDedup(batch: DataFrame, corpus: DataFrame,
                        threshold: Double, ngram: Int = 1): DataFrame = {
     import org.apache.spark.sql.expressions.Window
-    val session = Some(batch.sparkSession)
     def shingled(df: DataFrame, side: String) =
       df.select(col("doc_id"), lit(side).as("side"),
         sortedSet(ngramHashSet(col("text"), ngram)).as("w"),
@@ -572,7 +522,7 @@ object TextOps {
     val near = verifyCandidates2(candidates,
         sets.where(col("side") === "old").drop("side", "fp"),
         sets.where(col("side") === "new").drop("side", "fp"),
-        threshold, session)
+        threshold)
       .groupBy(col("doc_b").as("doc_id"))
       .agg(count(lit(1)).as("n_near"), max(col("jac")).as("max_jac"))
     val corpusFps = sets.where(col("side") === "old")
@@ -923,30 +873,6 @@ object TextOps {
 
   // ---- SimHash ------------------------------------------------------------
 
-  /** 64-bit simhash of a word list: sign-sum of per-word hash bits.
-    * The composed fallback (and parity oracle) for the native
-    * [[graft.functions.SimhashSignature]] expression — a 64-lane
-    * bit-arithmetic scalar is inexpressible as a function tree (64
-    * aggregate() expressions would defeat codegen), so the fallback
-    * is a Scala UDF. Deterministic: MurmurHash3 with fixed seeds, no
-    * JVM-dependent state. */
-  val simhash64 = udf { words: Seq[String] =>
-    val counts = new Array[Int](64)
-    words.foreach { w =>
-      val h = (scala.util.hashing.MurmurHash3.stringHash(w, 0xCAFEF00D).toLong << 32) |
-        (scala.util.hashing.MurmurHash3.stringHash(w, 0x9747B28C).toLong & 0xFFFFFFFFL)
-      var j = 0
-      while (j < 64) {
-        if (((h >>> j) & 1L) == 1L) counts(j) += 1 else counts(j) -= 1
-        j += 1
-      }
-    }
-    var sig = 0L
-    var j = 0
-    while (j < 64) { if (counts(j) > 0) sig |= (1L << j); j += 1 }
-    sig
-  }
-
   /** SimHash near-dup pairs: bucket on each of the four 16-bit chunks
     * (a pair within Hamming distance ≤ 16 shares at least one exact
     * chunk far more often than not; with maxHamming ≤ 3 recall is
@@ -961,17 +887,14 @@ object TextOps {
     * At that scale use [[nearDupMinhash]] (growing key space) or
     * pre-partition the corpus (per source/shard) before the simhash
     * pass; this operator's guarantee-exact distance filter is its
-    * value, not its asymptotics. */
+    * value, not its asymptotics.
+    *
+    * The 64-bit signature is the native
+    * [[graft.functions.SimhashSignature]] (sign-sum of per-word
+    * MurmurHash3 bits), which stays inside whole-stage codegen. */
   def nearDupSimhash(docs: DataFrame, maxHamming: Int): DataFrame = {
-    // native expression when installed (stays inside whole-stage
-    // codegen, no encoder round-trip); UDF fallback is bit-identical
-    // (SimhashSignatureSpec)
-    val words = split(col("text"), " ")
-    val sigExpr =
-      if (hasNative(Some(docs.sparkSession), "graft_simhash"))
-        call_function("graft_simhash", words)
-      else simhash64(words)
-    val sigs = docs.select(col("doc_id"), sigExpr.as("sig"))
+    val sigs = docs.select(col("doc_id"),
+      call_function("graft_simhash", split(col("text"), " ")).as("sig"))
     val chunked = sigs.select(col("doc_id"), col("sig"),
       explode(array((0 until 4).map(i =>
         struct(lit(i).as("chunk"),
@@ -1014,56 +937,21 @@ object TextOps {
     * the selected set is position-robust and guarantees any shared
     * substring of length ≥ k+w−1 contributes a shared fingerprint.
     * Hashes are md5 hex strings (not xxhash64) so the min-selection
-    * order is reproducible in any engine; pure expressions, one row
-    * pass, no shuffle.
+    * order is reproducible in any engine; one row pass through the
+    * native [[graft.functions.WinnowFingerprint]], no shuffle.
     *
     * Returns (doc_id, n_grams, n_selected, fp_digest) where fp_digest
     * is the md5 of the sorted distinct selected hashes. */
   def winnowingFingerprint(docs: DataFrame, k: Int = 8, w: Int = 4): DataFrame =
-    if (hasNative(Some(docs.sparkSession), "graft_winnow")) {
-      // native one-pass expression (monotonic-deque window minimum,
-      // reused digest); coalesce gives null text the same (0, 0,
-      // md5-of-empty) row the composed form's null-swallowing
-      // greatest/when chain produces
-      docs.select(col("doc_id"),
-        call_function("graft_winnow",
-          coalesce(col("text"), lit("")), lit(k), lit(w)).as("fp"))
-        .select(col("doc_id"), col("fp.n_grams").as("n_grams"),
-          col("fp.n_selected").as("n_selected"),
-          col("fp.fp_digest").as("fp_digest"))
-    } else winnowingFingerprintComposed(docs, k, w)
-
-  /** Composed-expression fallback (and the parity oracle for the
-    * native form — the spec asserts bit-identical output). */
-  private[graft] def winnowingFingerprintComposed(
-      docs: DataFrame, k: Int, w: Int): DataFrame = {
-    val n = (length(col("text")) - lit(k) + lit(1)).cast("int")
-    // materialize the gram-hash array as a real column: higher-order
-    // functions are interpreted with no cross-lambda CSE, so inlining
-    // this under the window transform would recompute ALL n md5s for
-    // every one of the n windows (O(n²) md5 calls per row)
-    // sequence(1, 0) DESCENDS ([1, 0]), it is not empty — same guard
-    // as ngramHashSet: docs shorter than k have no grams at all
-    val withGrams = docs.select(col("doc_id"), greatest(n, lit(0)).as("n"),
-      when(n >= 1,
-        transform(sequence(lit(1), n),
-          i => md5(col("text").substr(i, lit(k)).cast("binary"))))
-        .otherwise(array().cast("array<string>")).as("grams"))
-    val sel = when(col("n") >= w,
-      array_sort(array_distinct(transform(
-        sequence(lit(1), col("n") - lit(w) + lit(1)),
-        j => array_min(slice(col("grams"), j, lit(w)))))))
-      .otherwise(array().cast("array<string>"))
-    // sel as a column too: it feeds two outputs, and CollapseProject
-    // only refrains from inlining non-cheap aliases used once — this
-    // keeps both the gram pass and the window pass at once per row
-    withGrams.select(col("doc_id"), col("n"), sel.as("sel"))
-      .select(
-        col("doc_id"),
-        col("n").cast("bigint").as("n_grams"),
-        size(col("sel")).cast("bigint").as("n_selected"),
-        md5(concat_ws(",", col("sel")).cast("binary")).as("fp_digest"))
-  }
+    // native one-pass expression (monotonic-deque window minimum,
+    // reused digest); coalesce gives null text the (0, 0,
+    // md5-of-empty) row
+    docs.select(col("doc_id"),
+      call_function("graft_winnow",
+        coalesce(col("text"), lit("")), lit(k), lit(w)).as("fp"))
+      .select(col("doc_id"), col("fp.n_grams").as("n_grams"),
+        col("fp.n_selected").as("n_selected"),
+        col("fp.fp_digest").as("fp_digest"))
 
   /** Deterministic per-source sampling for data mixing: a document is
     * kept when the first hex byte of md5(doc_id) falls below its
@@ -1588,22 +1476,6 @@ object TextOps {
           col("dup_trigram_ratio") > flagAt)
   }
 
-  /** UDF fallback for the deflate measurement — bit-identical to
-    * [[graft.functions.DeflateLength]] (same java.util.zip stream,
-    * same level, raw/nowrap); DeflateLengthSpec asserts it. */
-  private def deflateLenUdf(level: Int) =
-    udf { (t: String) =>
-      val d = new java.util.zip.Deflater(level, true)
-      try {
-        d.setInput(t.getBytes(java.nio.charset.StandardCharsets.UTF_8))
-        d.finish()
-        val buf = new Array[Byte](8192)
-        var n = 0L
-        while (!d.finished()) n += d.deflate(buf)
-        n
-      } finally d.end()
-    }
-
   /** Compression-ratio quality signal (Gopher-style): DEFLATE each
     * document's UTF-8 bytes and report raw/compressed — boilerplate,
     * template spam, and phrase loops compress far better than prose,
@@ -1611,17 +1483,14 @@ object TextOps {
     * that catches repetition [[repetitionStats]]' fixed n-gram windows
     * miss (periods longer than 3 words, non-word structure). Pure
     * per-row work, zero shuffles; the deflate runs inside whole-stage
-    * codegen via the native [[graft.functions.DeflateLength]] when
-    * installed (UDF fallback bit-identical — same zlib call). Rows-
+    * codegen via the native [[graft.functions.DeflateLength]]. Rows-
     * only for the driver (DuckDB has no deflate); DeflateLengthSpec
-    * pins native==UDF parity and the flag semantics. */
+    * pins the expression against a driver-side Deflater and the flag
+    * semantics. */
   def compressionSignal(docs: DataFrame, level: Int = 6,
                         flagAt: Double = 3.0): DataFrame = {
     val text = coalesce(col("text"), lit(""))
-    val dl =
-      if (hasNative(Some(docs.sparkSession), "graft_deflate_len"))
-        call_function("graft_deflate_len", text, lit(level))
-      else deflateLenUdf(level)(text)
+    val dl = call_function("graft_deflate_len", text, lit(level))
     // column-appending (text dropped): downstream aggregates read the
     // carried dimensions (source, lang) without a second corpus scan
     docs
@@ -2164,21 +2033,12 @@ object TextOps {
     val fpCol = tokenSetFingerprint(col("text"))
     val bloom = eval_.select(fpCol.as("fp"))
       .stat.bloomFilter("fp", expectedEvalDocs, fpp)
-    // probe via the native codegen'd expression when installed (the
-    // sketch rides the plan as a binary literal, deserialized once per
-    // executor); the closure UDF is the bit-identical fallback —
-    // mightContainString is defined as mightContainBinary(utf8 bytes)
-    val probe =
-      if (hasNative(Some(train.sparkSession), "graft_bloom_contains")) {
-        val out = new java.io.ByteArrayOutputStream()
-        bloom.writeTo(out)
-        call_function("graft_bloom_contains", col("fp"), lit(out.toByteArray))
-      } else {
-        val mightContain = udf((fp: String) => bloom.mightContainString(fp))
-        mightContain(col("fp"))
-      }
+    // probe via the native codegen'd expression (the sketch rides the
+    // plan as a binary literal, deserialized once per executor)
+    val out = new java.io.ByteArrayOutputStream()
+    bloom.writeTo(out)
     train.select(col("doc_id"), fpCol.as("fp"))
-      .where(probe)
+      .where(call_function("graft_bloom_contains", col("fp"), lit(out.toByteArray)))
   }
 
   /** Screen-then-verify bloom contamination with a no-false-negatives

@@ -7,9 +7,9 @@ import org.apache.spark.storage.StorageLevel
 
 /** Similarity search over embedding columns (`array<float>`).
   *
-  * Hot paths are pure Catalyst expressions: the dot product is
-  * `aggregate(zip_with(a, b, *), 0.0, +)` — codegen'd, left-to-right
-  * (deterministic) accumulation in double.
+  * Hot paths are Catalyst expressions: the dot product is the native
+  * `graft_dot` — codegen'd, left-to-right (deterministic)
+  * accumulation in double.
   *
   * Scale design: the brute-force path broadcasts the (small) query
   * set against the corpus — linear in corpus size, the right baseline
@@ -20,26 +20,10 @@ import org.apache.spark.storage.StorageLevel
   * projection. */
 object VectorOps {
 
-  /** Probe for the native dot expression against the session the plan
-    * will RUN on — the frame's own session when in hand (every
-    * DataFrame entry point below passes it), the active session only
-    * for the Column-only public forms. See TextOps.hasNative: probing
-    * the wrong session in a multi-session setup fails at analysis
-    * instead of falling back (ADVICE r2). */
-  private def nativeDot(s: Option[SparkSession]): Boolean =
-    s.orElse(SparkSession.getActiveSession)
-      .exists(_.catalog.functionExists("graft_dot"))
-
-  private def dotIf(native: Boolean, a: Column, b: Column): Column =
-    if (native) call_function("graft_dot", a, b)
-    else aggregate(zip_with(a, b, (x, y) => x * y), lit(0.0), (acc, x) => acc + x)
-
-  /** Element-wise dot product of two double-array columns. Prefers the
-    * native codegen'd [[graft.functions.DotProduct]] when
-    * [[graft.GraftExtensions]] is installed on the active session;
-    * falls back to the bit-identical (but CodegenFallback) composed
-    * higher-order form otherwise. */
-  def dot(a: Column, b: Column): Column = dotIf(nativeDot(None), a, b)
+  /** Element-wise dot product of two double-array columns: the native
+    * codegen'd [[graft.functions.DotProduct]] (left-to-right
+    * accumulation in double). */
+  def dot(a: Column, b: Column): Column = call_function("graft_dot", a, b)
 
   private def asDouble(c: Column): Column = transform(c, x => x.cast("double"))
 
@@ -48,11 +32,9 @@ object VectorOps {
 
   /** Corpus projected to (vec_id, v, n): double vector + its norm,
     * computed once. */
-  private def prepared(embeddings: DataFrame): DataFrame = {
-    val nd = nativeDot(Some(embeddings.sparkSession))
+  private def prepared(embeddings: DataFrame): DataFrame =
     embeddings.select(col("vec_id"), asDouble(col("embedding")).as("v"))
-      .withColumn("n", sqrt(dotIf(nd, col("v"), col("v"))))
-  }
+      .withColumn("n", sqrt(dot(col("v"), col("v"))))
 
   /** Exact brute-force cosine top-k: the query side (a handful of
     * vectors) is broadcast; every corpus partition scores its rows
@@ -60,12 +42,11 @@ object VectorOps {
     * the score rounded to 4 decimals with a vec_id tiebreak so the
     * result set is stable across engines and partitionings. */
   def cosineTopK(embeddings: DataFrame, queries: DataFrame, k: Int): DataFrame = {
-    val nd = nativeDot(Some(embeddings.sparkSession))
     val corpus = prepared(embeddings)
     val qs = prepared(queries)
       .select(col("vec_id").as("query_id"), col("v").as("qv"), col("n").as("qn"))
     val scored = corpus.join(broadcast(qs), col("query_id") =!= col("vec_id"))
-      .withColumn("cos", round(dotIf(nd, col("v"), col("qv")) / (col("n") * col("qn")), 4))
+      .withColumn("cos", round(dot(col("v"), col("qv")) / (col("n") * col("qn")), 4))
     val w = Window.partitionBy(col("query_id"))
       .orderBy(col("cos").desc, col("vec_id"))
     scored
@@ -139,7 +120,6 @@ object VectorOps {
                 shortlist: Int = 30, lambda: Double = 0.7): DataFrame = {
     val spark = embeddings.sparkSession
     import spark.implicits._
-    val nd = nativeDot(Some(spark))
     val short = cosineTopK(embeddings, queries, shortlist)
     // fetch-by-id for the shortlist members only (the PQ-rerank
     // pattern): broadcast the bounded id set so the corpus streams
@@ -150,7 +130,7 @@ object VectorOps {
     val su = embeddings
       .select(col("vec_id"), asDouble(col("embedding")).as("v"))
       .join(broadcast(ids), "vec_id")
-      .withColumn("n", sqrt(dotIf(nd, col("v"), col("v"))))
+      .withColumn("n", sqrt(dot(col("v"), col("v"))))
       .select(col("vec_id"), transform(col("v"), x => x / col("n")).as("u"))
     val cands = short.join(su, "vec_id")
     val mmr = udf { (cs: Seq[org.apache.spark.sql.Row]) =>
@@ -180,12 +160,11 @@ object VectorOps {
   def randomProject(embeddings: DataFrame, outDim: Int, inDim: Int,
                     seed: Long = 42L): DataFrame = {
     require(outDim >= 1 && inDim >= 1)
-    val nd = nativeDot(Some(embeddings.sparkSession))
     val rnd = new scala.util.Random(seed)
     val scale = 1.0 / math.sqrt(outDim.toDouble)
     val planes = Seq.fill(outDim)(Array.fill(inDim)(rnd.nextGaussian() * scale))
     embeddings.select(col("vec_id"),
-      array(planes.map(p => dotIf(nd, asDouble(col("embedding")),
+      array(planes.map(p => dot(asDouble(col("embedding")),
         array(p.toIndexedSeq.map(lit): _*))): _*).as("embedding"))
   }
 
@@ -199,29 +178,25 @@ object VectorOps {
   /** Random-hyperplane (SimHash-for-vectors) signature: bit j is the
     * sign of ⟨v, h_j⟩. Vectors with small angle share signatures with
     * high probability. */
-  def lshSignature(v: Column, bits: Int, dim: Int,
-                   session: Option[SparkSession] = None): Column = {
-    val nd = nativeDot(session)
+  def lshSignature(v: Column, bits: Int, dim: Int): Column =
     hyperplanes(bits, dim).zipWithIndex.map { case (h, j) =>
-      when(dotIf(nd, v, array(h.toIndexedSeq.map(lit): _*)) >= 0, lit(1L << j)).otherwise(lit(0L))
+      when(dot(v, array(h.toIndexedSeq.map(lit): _*)) >= 0, lit(1L << j)).otherwise(lit(0L))
     }.reduce(_ + _)
-  }
 
   /** Approximate top-k: candidates share the query's LSH bucket; the
     * per-bucket join replaces the corpus × query cross join. Recall
     * trades off with `bits` (more bits → smaller buckets). */
   def annTopK(embeddings: DataFrame, queries: DataFrame, k: Int,
               bits: Int = 8, dim: Int = 64): DataFrame = {
-    val nd = Some(embeddings.sparkSession)
     val corpus = prepared(embeddings)
-      .withColumn("sig", lshSignature(col("v"), bits, dim, nd))
+      .withColumn("sig", lshSignature(col("v"), bits, dim))
     val qs = prepared(queries)
       .select(col("vec_id").as("query_id"), col("v").as("qv"), col("n").as("qn"))
-      .withColumn("qsig", lshSignature(col("qv"), bits, dim, nd))
+      .withColumn("qsig", lshSignature(col("qv"), bits, dim))
     val scored = corpus
       .join(broadcast(qs),
         col("sig") === col("qsig") && col("query_id") =!= col("vec_id"))
-      .withColumn("cos", round(dotIf(nativeDot(nd), col("v"), col("qv")) / (col("n") * col("qn")), 4))
+      .withColumn("cos", round(dot(col("v"), col("qv")) / (col("n") * col("qn")), 4))
     val w = Window.partitionBy(col("query_id"))
       .orderBy(col("cos").desc, col("vec_id"))
     scored
@@ -269,49 +244,17 @@ object VectorOps {
     centers
   }
 
-  /** Expression-form nearest-cell assignment: argmin over the literal
-    * center list of ‖v‖² − 2⟨v,cᵢ⟩ + ‖cᵢ‖² (the ‖v‖² term is constant
-    * per row and dropped). Codegen'd — one pass, no UDF, no ML vector
-    * conversion. Ties break to the lower cell id via the struct
-    * ordering. */
-  /** Per-center (distance, cell) structs — the composed fallback's
-    * distance expression, one definition for every assignment form. */
-  private def cellDistances(v: Column, centers: Array[Array[Double]],
-                            native: Boolean): Column = {
-    val ds = centers.zipWithIndex.map { case (c, i) =>
-      val c2 = c.map(x => x * x).sum
-      struct((dotIf(native, v, array(c.toIndexedSeq.map(lit): _*)) * lit(-2.0) + lit(c2)).as("d"),
-        lit(i).as("cell"))
-    }
-    array(ds.toIndexedSeq: _*)
-  }
-
   /** Quantizer encode — all three call shapes (coarse cell, IVF
     * multi-assignment, PQ codes) through ONE column: per subspace
     * (widths from the codebook shapes, laid end-to-end), the
-    * `nAssign` nearest center indices. Routes to the native
-    * [[graft.functions.PqEncode]] when [[graft.GraftExtensions]] is
-    * installed — the composed argmin tree evaluates hundreds of
-    * interpreted nodes per row and dominated the PQ/IVF wall time —
-    * and falls back to the bit-identical composed form otherwise
-    * (parity asserted in PqEncodeSpec). */
-  private def pqEncodeIf(native: Boolean, v: Column,
-                         books: Array[Array[Array[Double]]],
-                         nAssign: Int): Column =
-    if (native)
-      call_function("graft_pq_encode", v,
-        typedLit(books.map(_.map(_.toSeq).toSeq).toSeq), lit(nAssign))
-    else if (books.length == 1)
-      transform(slice(array_sort(cellDistances(v, books(0), native)),
-        1, nAssign), s => s.getField("cell"))
-    else {
-      val w = books(0)(0).length
-      concat(books.zipWithIndex.map { case (b, s) =>
-        transform(slice(array_sort(
-          cellDistances(slice(v, s * w + 1, w), b, native)), 1, nAssign),
-          x => x.getField("cell"))
-      }.toIndexedSeq: _*)
-    }
+    * `nAssign` nearest center indices by ‖v‖² − 2⟨v,cᵢ⟩ + ‖cᵢ‖² (the
+    * ‖v‖² term dropped), ties to the lower index. The native
+    * [[graft.functions.PqEncode]] — one codegen'd pass per row, no
+    * UDF, no ML vector conversion. */
+  private def pqEncode(v: Column, books: Array[Array[Array[Double]]],
+                       nAssign: Int): Column =
+    call_function("graft_pq_encode", v,
+      typedLit(books.map(_.map(_.toSeq).toSeq).toSeq), lit(nAssign))
 
   /** IVF-style approximate top-k: a coarse quantizer partitions the
     * corpus into cells; each query probes its `nProbe` nearest cells
@@ -374,7 +317,7 @@ object VectorOps {
 
   /** nProbe nearest coarse cells per center, BIT-IDENTICAL to the
     * expression path's ranking: the same −2⟨q,c⟩ + ‖c‖² IEEE sequence
-    * [[cellDistances]] evaluates (a full ‖q−c‖² would round
+    * [[graft.functions.PqEncode]] evaluates (a full ‖q−c‖² would round
     * differently in the last ulp and could order a near-tie across
     * the two paths differently), stable ascending sort → lower cell
     * id wins ties, matching the struct ordering of `array_sort`. */
@@ -420,9 +363,8 @@ object VectorOps {
         .select(col("query_id"), col("vec_id"), col("cos"), col("rank"))
     }
     val centers = localKMeans(trainRows, autoCells(corpus, nCells), iters = 5)
-    val nd = nativeDot(Some(embeddings.sparkSession))
     val celled = corpus.withColumn("cell",
-      element_at(pqEncodeIf(nd, col("v"), Array(centers), 1), 1))
+      element_at(pqEncode(col("v"), Array(centers), 1), 1))
     cellProbeTopK(embeddings.sparkSession, celled, centers, queries, k,
       nProbe, driverProbeLimit)
   }
@@ -443,7 +385,6 @@ object VectorOps {
                             queries: DataFrame, k: Int, nProbe: Int,
                             driverProbeLimit: Int): DataFrame = {
     import spark.implicits._
-    val nd = nativeDot(Some(spark))
     val nP = math.min(nProbe, centers.length)
     val qs = prepared(queries)
       .select(col("vec_id").as("query_id"), col("v").as("qv"), col("n").as("qn"))
@@ -454,13 +395,12 @@ object VectorOps {
           .toDF("query_id", "qcell", "qv", "qn"))
       case None =>
         qs.withColumn("qcell",
-          explode(pqEncodeIf(nd, col("qv"), Array(centers), nP)))
+          explode(pqEncode(col("qv"), Array(centers), nP)))
           .select(col("query_id"), col("qcell"), col("qv"), col("qn"))
     }
     val scored = celled.join(probed,
       celled("cell") === probed("qcell") && col("query_id") =!= col("vec_id"))
-      .withColumn("cos", round(dotIf(nd,
-        col("v"), col("qv")) / (col("n") * col("qn")), 4))
+      .withColumn("cos", round(dot(col("v"), col("qv")) / (col("n") * col("qn")), 4))
     val w = Window.partitionBy(col("query_id"))
       .orderBy(col("cos").desc, col("vec_id"))
     scored
@@ -812,11 +752,10 @@ object VectorOps {
     * ordering and layout independence. */
   def pcaProject(embeddings: DataFrame, k: Int, dim: Int = 64): DataFrame = {
     val (_, mean, _, basis) = pcaBasis(embeddings, k, dim)
-    val nd = nativeDot(Some(embeddings.sparkSession))
     val corpus = prepared(embeddings).select(col("vec_id"), col("v"))
     val pcs = basis.zipWithIndex.map { case (e, j) =>
       val shift = e.zip(mean).map { case (ei, mi) => ei * mi }.sum
-      round(dotIf(nd, col("v"), array(e.toIndexedSeq.map(lit): _*)) - lit(shift), 4)
+      round(dot(col("v"), array(e.toIndexedSeq.map(lit): _*)) - lit(shift), 4)
         .as(s"pc${j + 1}")
     }
     corpus.select(col("vec_id") +: pcs.toIndexedSeq: _*)
@@ -847,7 +786,6 @@ object VectorOps {
              maxTrain: Int = 4096, driverProbeLimit: Int = 1024): DataFrame = {
     val spark = embeddings.sparkSession
     import spark.implicits._
-    val nd = nativeDot(Some(spark))
     val corpus = prepared(embeddings)
     val trainRows = trainSample(corpus, maxTrain)
     if (trainRows.isEmpty) {
@@ -864,24 +802,24 @@ object VectorOps {
     }
     // encode: coarse cell + one expression-argmin per subspace
     val coded = corpus
-      .withColumn("cell", element_at(pqEncodeIf(nd, col("v"), Array(coarse), 1), 1))
-      .withColumn("codes", pqEncodeIf(nd, col("v"), books, 1))
+      .withColumn("cell", element_at(pqEncode(col("v"), Array(coarse), 1), 1))
+      .withColumn("codes", pqEncode(col("v"), books, 1))
     val probeDf = pqProbeDf(spark, queries, coarse, books, subs,
       codebookSize, w_, nProbe, driverProbeLimit)
     // v rides the coded rows, so the rerank needs no fetch
-    exactRerank(adcShortlist(coded, probeDf, subs, codebookSize, rerank), k, nd)
+    exactRerank(adcShortlist(coded, probeDf, subs, codebookSize, rerank), k)
   }
 
   /** Exact-cosine rerank tail shared by [[pqTopK]] and
     * [[storedPqIndexTopK]] — ONE copy of the driver-contract-critical
     * round-to-4 / vec_id-tiebreak / rank ≤ k rendering. Expects
     * (query_id, vec_id, v, n, qv, qn) on every shortlist row. */
-  private def exactRerank(shortlist: DataFrame, k: Int, nd: Boolean): DataFrame = {
+  private def exactRerank(shortlist: DataFrame, k: Int): DataFrame = {
     val w2 = Window.partitionBy(col("query_id"))
       .orderBy(col("cos").desc, col("vec_id"))
     shortlist
       .withColumn("cos",
-        round(dotIf(nd, col("v"), col("qv")) / (col("n") * col("qn")), 4))
+        round(dot(col("v"), col("qv")) / (col("n") * col("qn")), 4))
       .select(col("query_id"), col("vec_id"), col("cos"))
       .withColumn("rank", row_number().over(w2))
       .where(col("rank") <= k)
@@ -902,7 +840,6 @@ object VectorOps {
                         subs: Int, codebookSize: Int, w_ : Int,
                         nProbe: Int, driverProbeLimit: Int): DataFrame = {
     import spark.implicits._
-    val nd = nativeDot(Some(spark))
     val nP = math.min(nProbe, coarse.length)
     val qs = prepared(queries)
       .select(col("vec_id").as("query_id"), col("v").as("qv"), col("n").as("qn"))
@@ -940,12 +877,12 @@ object VectorOps {
           s <- 0 until subs; c <- 0 until codebookSize
         } yield {
           if (c >= books(s).length) lit(0.0)
-          else dotIf(nd, slice(col("qv"), s * w_ + 1, w_),
+          else dot(slice(col("qv"), s * w_ + 1, w_),
             array(books(s)(c).toIndexedSeq.map(lit): _*))
         }): _*)
         qs.withColumn("tbl", tblCol)
           .withColumn("qcell",
-            explode(pqEncodeIf(nd, col("qv"), Array(coarse), nP)))
+            explode(pqEncode(col("qv"), Array(coarse), nP)))
           .select(col("query_id"), col("qcell"), col("tbl"), col("qv"), col("qn"))
     }
   }
@@ -1104,8 +1041,7 @@ object VectorOps {
     val b = p.select(col("vec_id").as("vec_b"), col("label").as("label_b"),
       col("v").as("vb"), col("n").as("nb"))
     a.join(b, col("label") === col("label_b") && col("vec_a") < col("vec_b"))
-      .withColumn("cos", dotIf(nativeDot(Some(embeddings.sparkSession)),
-        col("va"), col("vb")) / (col("na") * col("nb")))
+      .withColumn("cos", dot(col("va"), col("vb")) / (col("na") * col("nb")))
       .where(col("cos") >= threshold)
       .select(col("vec_a"), col("vec_b"), round(col("cos"), 4).as("cos"))
   }
@@ -1134,7 +1070,6 @@ object VectorOps {
                           maxTrain: Int = 4096): DataFrame = {
     val spark = embeddings.sparkSession
     import spark.implicits._
-    val native = nativeDot(Some(spark))
     val corpus = prepared(embeddings)
     val trainRows = trainSample(corpus, maxTrain)
     if (trainRows.isEmpty) {
@@ -1151,7 +1086,7 @@ object VectorOps {
     // so a lost block re-encodes its partition instead of failing
     // the query on executor loss.
     val celled = corpus.select(col("vec_id"),
-      explode(pqEncodeIf(native, col("v"), Array(centers), nAssign)).as("cell"))
+      explode(pqEncode(col("v"), Array(centers), nAssign)).as("cell"))
       .persist(StorageLevel.MEMORY_AND_DISK)
     val pairs = celled.select(col("cell"), col("vec_id").as("vec_a"))
       .join(celled.select(col("cell").as("cell_b"), col("vec_id").as("vec_b")),
@@ -1163,7 +1098,7 @@ object VectorOps {
         col("n").as("na")), "vec_a")
       .join(corpus.select(col("vec_id").as("vec_b"), col("v").as("vb"),
         col("n").as("nb")), "vec_b")
-      .withColumn("cos", dotIf(native, col("va"), col("vb")) / (col("na") * col("nb")))
+      .withColumn("cos", dot(col("va"), col("vb")) / (col("na") * col("nb")))
       .where(col("cos") >= threshold)
       .select(col("vec_a"), col("vec_b"), round(col("cos"), 4).as("cos"))
   }
@@ -1185,7 +1120,6 @@ object VectorOps {
                     nCells: Int = 0, maxTrain: Int = 4096): Unit = {
     val spark = embeddings.sparkSession
     import spark.implicits._
-    val native = nativeDot(Some(spark))
     val corpus = prepared(embeddings)
     val trainRows = trainSample(corpus, maxTrain)
     require(trainRows.nonEmpty, "cannot build an IVF index on an empty corpus")
@@ -1215,7 +1149,7 @@ object VectorOps {
       .write.mode("overwrite").parquet(s"$indexDir/centroids")
     corpus.withColumn("gen", lit(0))
       .withColumn("cell",
-        element_at(pqEncodeIf(native, col("v"), Array(centers), 1), 1))
+        element_at(pqEncode(col("v"), Array(centers), 1), 1))
       .write.mode("overwrite")
       // STATIC pinned: under a session-wide dynamic default this
       // rebuild would keep old cell dirs empty under the NEW
@@ -1241,17 +1175,16 @@ object VectorOps {
   def incrementalNearDupIvf(spark: SparkSession, indexDir: String,
                             batch: DataFrame, threshold: Double,
                             nAssign: Int = 4): DataFrame = {
-    val native = nativeDot(Some(spark))
     val centers = storedCenters(spark, indexDir)
     val stored = readCorpus(spark, indexDir)
       .select(col("vec_id").as("corpus_id"), col("cell"),
         col("v").as("cv"), col("n").as("cn"))
     val probes = prepared(batch)
       .select(col("vec_id").as("batch_id"), col("v").as("bv"), col("n").as("bn"))
-      .withColumn("qcell", explode(pqEncodeIf(native, col("bv"),
+      .withColumn("qcell", explode(pqEncode(col("bv"),
         Array(centers), math.min(nAssign, centers.length))))
     probes.join(stored, probes("qcell") === stored("cell"))
-      .withColumn("cos", dotIf(native, col("bv"), col("cv")) / (col("bn") * col("cn")))
+      .withColumn("cos", dot(col("bv"), col("cv")) / (col("bn") * col("cn")))
       .where(col("cos") >= threshold)
       .select(col("batch_id"), col("corpus_id"), round(col("cos"), 4).as("cos"))
   }
@@ -1294,10 +1227,9 @@ object VectorOps {
     require(!isPqLayout(spark, indexDir),
       s"$indexDir is a codes-only IVF+PQ index (it has a meta/ dir); " +
         "raw-vector append does not apply — use appendToIvfPqIndex")
-    val native = nativeDot(Some(spark))
     val centers = storedCenters(spark, indexDir)
     val coded = prepared(batch).withColumn("cell",
-      element_at(pqEncodeIf(native, col("v"), Array(centers), 1), 1))
+      element_at(pqEncode(col("v"), Array(centers), 1), 1))
       .select(col("vec_id"), col("v"), col("n"), col("cell"))
     appendStaged(spark, indexDir, coded)
   }
@@ -1318,15 +1250,14 @@ object VectorOps {
     require(isPqLayout(spark, indexDir),
       s"$indexDir is a raw-vector IVF index (no meta/ dir); " +
         "use appendToIvfIndex")
-    val native = nativeDot(Some(spark))
     val meta = spark.read.parquet(s"$indexDir/meta").collect()(0)
     val subs = meta.getAs[Int]("subs")
     val dim = meta.getAs[Int]("dim")
     val coarse = storedCenters(spark, indexDir)
     val books = storedBooks(spark, indexDir, subs)
     val coded = prepared(batch)
-      .withColumn("cell", element_at(pqEncodeIf(native, col("v"), Array(coarse), 1), 1))
-      .withColumn("codes", pqEncodeIf(native, col("v"), books, 1))
+      .withColumn("cell", element_at(pqEncode(col("v"), Array(coarse), 1), 1))
+      .withColumn("codes", pqEncode(col("v"), books, 1))
       .select(col("vec_id"), col("codes"), col("n"), col("cell"))
     require(dim % subs == 0, s"stored meta corrupt: dim $dim, subs $subs")
     appendStaged(spark, indexDir, coded)
@@ -1535,8 +1466,7 @@ object VectorOps {
       coded.observe(obs, collect_set(col("cell")).as("cells"))
         .write.mode("overwrite").parquet(s"$staging/batch")
       val batch = spark.read.parquet(s"$staging/batch")
-      val touched = obs.get("cells")
-        .asInstanceOf[scala.collection.Seq[Int]].toArray
+      val touched = Observed.ints(obs.get("cells"), "cells").toArray
       if (touched.isEmpty) return // empty batch: schedule no write at all
       val existing = spark.read.parquet(s"$indexDir/corpus")
       val carried = stageRead(
@@ -1583,7 +1513,6 @@ object VectorOps {
                       maxTrain: Int = 4096): Unit = {
     val spark = embeddings.sparkSession
     import spark.implicits._
-    val native = nativeDot(Some(spark))
     val corpus = prepared(embeddings)
     val trainRows = trainSample(corpus, maxTrain)
     require(trainRows.nonEmpty, "cannot build an IVF+PQ index on an empty corpus")
@@ -1617,8 +1546,8 @@ object VectorOps {
       .toDF("sub", "code", "center")
       .coalesce(1).write.mode("overwrite").parquet(s"$indexDir/books")
     corpus
-      .withColumn("cell", element_at(pqEncodeIf(native, col("v"), Array(coarse), 1), 1))
-      .withColumn("codes", pqEncodeIf(native, col("v"), books, 1))
+      .withColumn("cell", element_at(pqEncode(col("v"), Array(coarse), 1), 1))
+      .withColumn("codes", pqEncode(col("v"), books, 1))
       .select(col("vec_id"), col("codes"), col("n"), lit(0).as("gen"), col("cell"))
       .write.mode("overwrite")
       .option("partitionOverwriteMode", "static") // the buildIvfIndex rule
@@ -1638,7 +1567,6 @@ object VectorOps {
                         embeddings: DataFrame, queries: DataFrame, k: Int,
                         nProbe: Int = 4, rerank: Int = 64,
                         driverProbeLimit: Int = 1024): DataFrame = {
-    val nd = nativeDot(Some(spark))
     val meta = spark.read.parquet(s"$indexDir/meta").collect()(0)
     val subs = meta.getAs[Int]("subs")
     val codebookSize = meta.getAs[Int]("codebook_size")
@@ -1662,7 +1590,7 @@ object VectorOps {
       broadcast(shortlist.select(col("query_id"), col("vec_id"),
         col("n"), col("qv"), col("qn"))),
       Seq("vec_id"))
-    exactRerank(fetched, k, nd)
+    exactRerank(fetched, k)
   }
 
   /** DELETE ids from a stored IVF index — the missing half of update
@@ -2009,7 +1937,6 @@ object VectorOps {
                       maxTrain: Int = 4096): DataFrame = {
     val spark = embeddings.sparkSession
     import spark.implicits._
-    val native = nativeDot(Some(spark))
     val corpus = prepared(embeddings)
     val trainRows = trainSample(corpus, maxTrain)
     if (trainRows.isEmpty) {
@@ -2017,7 +1944,7 @@ object VectorOps {
     }
     val centers = localKMeans(trainRows, autoCells(corpus, nCells), iters = 5)
     corpus.select(col("vec_id"),
-      element_at(pqEncodeIf(native, col("v"), Array(centers), 1), 1)
+      element_at(pqEncode(col("v"), Array(centers), 1), 1)
         .cast("bigint").as("cell"))
   }
 

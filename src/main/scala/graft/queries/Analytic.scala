@@ -740,14 +740,6 @@ object Analytic {
     val adj = oriented.groupBy(col("u"))
       .agg(sort_array(collect_list(col("v"))).as("nbrs"))
       .persist(StorageLevel.MEMORY_AND_DISK)
-    val native = scala.util.Try(s.sessionState.functionRegistry
-      .functionExists(
-        org.apache.spark.sql.catalyst.FunctionIdentifier("graft_isect")))
-      .getOrElse(false)
-    def isect(a: Column, b: Column): Column =
-      // neighbor lists are sets, so the composed fallback is exact
-      if (native) call_function("graft_isect", a, b)
-      else size(array_intersect(a, b)).cast("long")
     val empty = array().cast("array<bigint>")
     // The oriented EDGE VIEW over the cached adjacency: one narrow
     // explode recovers every (u, v) edge with nbrs(u) ALREADY
@@ -770,7 +762,7 @@ object Analytic {
     edges
       .join(hinted(adj.select(col("u").as("v"),
         col("nbrs").as("nbrs_v"))), Seq("v"), "left")
-      .agg(coalesce(sum(isect(col("nbrs"),
+      .agg(coalesce(sum(call_function("graft_isect", col("nbrs"),
         coalesce(col("nbrs_v"), empty))), lit(0L)).as("n_triangles"))
       .select(lit(nNodes).as("n_nodes"), lit(m).as("n_edges"),
         lit(nWedges).as("n_wedges"), col("n_triangles"),

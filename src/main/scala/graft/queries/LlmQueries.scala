@@ -1640,9 +1640,8 @@ object LlmQueries {
     * ([[graft.ops.TextOps.compressionSignal]]): per-document DEFLATE
     * ratio plus the corpus summary a curation run reads (per-source
     * mean ratio and flagged share). Rows-only — DuckDB has no deflate;
-    * DeflateLengthSpec pins the native expression against the UDF
-    * fallback bit-for-bit and the ratio/flag arithmetic against a
-    * driver-side Deflater fold. */
+    * DeflateLengthSpec pins the native expression and the ratio/flag
+    * arithmetic against a driver-side Deflater fold. */
   private def q181(s: SparkSession, dir: String): DataFrame =
     // oracled since r14: DuckDB still has no deflate, but the
     // per-source DOC COUNTS are exact conservation it recomputes, and

@@ -58,20 +58,12 @@ object Relational {
     val sel = Tables(s, dir, "orders")
       .where(col("o_orderpriority") === "1-URGENT")
       .select(col("o_orderkey"), col("o_orderdate"))
-    val bloom = sel.stat.bloomFilter("o_orderkey", 20000L, 0.01)
-    val probe: Column =
-      if (s.catalog.functionExists("graft_bloom_contains")) {
-        val out = new java.io.ByteArrayOutputStream()
-        bloom.writeTo(out)
-        call_function("graft_bloom_contains",
-          col("l_orderkey"), lit(out.toByteArray))
-      } else {
-        val mc = udf((k: Long) => bloom.mightContainLong(k))
-        mc(col("l_orderkey"))
-      }
+    val bloom = new java.io.ByteArrayOutputStream()
+    sel.stat.bloomFilter("o_orderkey", 20000L, 0.01).writeTo(bloom)
     Tables(s, dir, "lineitem")
       .select(col("l_orderkey"), col("l_extendedprice"), col("l_discount"))
-      .where(probe)
+      .where(call_function("graft_bloom_contains",
+        col("l_orderkey"), lit(bloom.toByteArray)))
       .join(sel, col("l_orderkey") === col("o_orderkey"))
       .groupBy(date_trunc("month", col("o_orderdate")).as("month"))
       .agg(count(lit(1)).as("n_items"),
@@ -91,8 +83,12 @@ object Relational {
 
   // ---- scan / filter / project / aggregate --------------------------------
 
-  /** TPC-H Q1-style pricing summary: full-scan partial+final hash agg. */
+  /** TPC-H Q1-style pricing summary: full-scan partial+final hash agg.
+    * The averages divide the exact decimal sum by the count in double
+    * and round ONCE at 4, as DuckDB's `avg(DECIMAL)` (a DOUBLE) does;
+    * Spark's decimal `avg` would first round at 6 places. */
   private def q01(s: SparkSession, dir: String): DataFrame = {
+    def avgOnce(c: Column): Column = round(asD(sum(c)) / count(c), 4)
     Tables(s, dir, "lineitem")
       .where(col("l_shipdate") <= lit("1998-09-02").cast("timestamp"))
       .groupBy(col("l_returnflag"), col("l_linestatus"))
@@ -101,8 +97,8 @@ object Relational {
         asD(sum(dec(col("l_extendedprice"), 14, 2))).as("sum_base_price"),
         asD(sum(dec(col("l_extendedprice") * (lit(1.0) - col("l_discount")), 18, 6))).as("sum_disc_price"),
         asD(sum(dec(col("l_extendedprice") * (lit(1.0) - col("l_discount")) * (lit(1.0) + col("l_tax")), 18, 6))).as("sum_charge"),
-        round(avg(dec(col("l_quantity"), 12, 2)), 4).cast("double").as("avg_qty"),
-        round(avg(dec(col("l_discount"), 8, 4)), 4).cast("double").as("avg_disc"),
+        avgOnce(dec(col("l_quantity"), 12, 2)).as("avg_qty"),
+        avgOnce(dec(col("l_discount"), 8, 4)).as("avg_disc"),
         count(lit(1)).as("count_order"))
       .orderBy(col("l_returnflag"), col("l_linestatus"))
   }

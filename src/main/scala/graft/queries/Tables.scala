@@ -25,8 +25,8 @@ import org.apache.spark.sql.types.{LongType, TimestampNTZType, TimestampType}
 object Tables {
   def apply(s: SparkSession, dir: String, name: String): DataFrame =
     if (name == "events") {
-      // The flag is set at session bootstrap by graft's own entry
-      // points (Verify/Bench/SparkTestBase builders); this set is the
+      // The flag is set at session bootstrap by graft.GraftSession,
+      // which every graft entry point builds through; this set is the
       // idempotent FALLBACK for externally-built sessions (e.g. the
       // driver's own smoke session) so a library user needs no special
       // conf. The legacy mapping is consulted when the reader converts
@@ -62,11 +62,10 @@ object Tables {
     * layouts and matches what a DuckDB oracle computes over the same
     * arrays — the engine cosine convention. Three private copies had
     * already accreted (review r11); any future change to the fold
-    * lands here or nowhere. Delegates to [[graft.ops.VectorOps.dot]]:
-    * the native codegen'd `graft_dot` when GraftExtensions is
-    * installed (spec-pinned BIT-IDENTICAL to the fold — oracle parity
-    * unaffected), the composed `aggregate(zip_with(...))` fold
-    * otherwise. */
+    * lands here or nowhere. Delegates to [[graft.ops.VectorOps.dot]],
+    * the native codegen'd `graft_dot` (DotProductSpec pins it
+    * BIT-IDENTICAL to the `aggregate(zip_with(...))` fold the oracle
+    * computes). */
   private[queries] def dotFold(a: org.apache.spark.sql.Column,
                                b: org.apache.spark.sql.Column)
       : org.apache.spark.sql.Column =

@@ -434,10 +434,9 @@ object EventStreams {
   def nearDupIngest(docs: DataFrame, nSig: Int = 12, bands: Int = 3,
                     lateness: String = "30 minutes",
                     window_ : String = "10 minutes"): DataFrame = {
-    val session = Some(docs.sparkSession)
     val banded = docs
       .withColumn("sig", graft.ops.TextOps.minhashSignatureFromHashes(
-        graft.ops.TextOps.ngramHashSet(col("text"), 1), nSig, session))
+        graft.ops.TextOps.ngramHashSet(col("text"), 1), nSig))
       .select(col("ts"), col("doc_id"), col("text"),
         explode(graft.ops.TextOps.bandStructs(col("sig"), nSig, bands)).as("b"))
       .select(col("ts"), col("doc_id"), col("text"),

@@ -5,19 +5,12 @@ import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Shared local SparkSession for integration specs (one per suite;
-  * cheap after the first JVM-wide context). */
+  * cheap after the first JVM-wide context), built through
+  * [[GraftSession]] with one override, [[SparkTestBase.fsOverride]]. */
 trait SparkTestBase extends AnyFunSuite with BeforeAndAfterAll {
 
-  lazy val spark: SparkSession = SparkSession.builder()
-      .withExtensions(new GraftExtensions)
-    .master("local[4]")
-    .appName(getClass.getSimpleName)
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    // events' TIMESTAMP(NANOS) mapping, set at session bootstrap
-    // (TablesSpec asserts events is the ONLY table needing it)
-    .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-    .config("spark.ui.enabled", "false")
+  lazy val spark: SparkSession = GraftSession.builder(getClass.getSimpleName)
+    .config(SparkTestBase.fsOverride._1, SparkTestBase.fsOverride._2)
     .getOrCreate()
 
   override def beforeAll(): Unit = {
@@ -32,4 +25,13 @@ trait SparkTestBase extends AnyFunSuite with BeforeAndAfterAll {
       classOf[graft.sources.GraftCatalog].getName)
 
   val sfDir = "/root/testdata/sf0.001"
+}
+
+object SparkTestBase {
+  /** Hadoop's checksummed `LocalFileSystem` in place of GraftSession's
+    * raw one: the crash and fuzz specs delete `.crc` sidecars, and
+    * JsonLease's `ChecksumFileSystem` unwrap branch is exercised only
+    * under a checksummed file system. */
+  val fsOverride: (String, String) =
+    "spark.hadoop.fs.file.impl" -> classOf[org.apache.hadoop.fs.LocalFileSystem].getName
 }

@@ -4,11 +4,11 @@ import graft.SparkTestBase
 import graft.ops.TextOps
 import org.apache.spark.sql.functions._
 
-/** The native deflate measurement must be bit-identical to the UDF
-  * fallback AND to a driver-side Deflater fold — q181's low-entropy
-  * flag sits on the exact byte count, and zlib output depends on the
-  * (level, nowrap) configuration, so one mismatched flag would shift
-  * ratios corpus-wide. */
+/** The native deflate measurement must be bit-identical to a
+  * driver-side Deflater fold — q181's low-entropy flag sits on the
+  * exact byte count, and zlib output depends on the (level, nowrap)
+  * configuration, so one mismatched flag would shift ratios
+  * corpus-wide. */
 class DeflateLengthSpec extends SparkTestBase {
 
   private def driverDeflateLen(t: String, level: Int): Long = {
